@@ -49,8 +49,9 @@ object Crawler {
   def resume(jobs: DataFrame, done: DataFrame): DataFrame =
     jobs.join(done, Seq("main_index"), "left_anti")
 
-  /** S2+S4: fetch each job's search URL under a per-partition token bucket
-    * and return (main_index, body). */
+  /** S2+S4: fetch each job's URL under a per-partition token bucket and
+    * return (main_index, `urlCol`, body): the URL stays with its body, so
+    * a job with several URLs never needs a join to tell them apart. */
   def fetchBodies(spark: SparkSession, jobs: DataFrame, urlCol: String,
       fetcher: Clients.Fetcher, globalRate: Double = GlobalRatePerSec): DataFrame = {
     import spark.implicits._
@@ -66,9 +67,9 @@ object Crawler {
         lazy val client = fetcher
         rows.map { case (idx, url) =>
           bucket.acquire()
-          (idx, client.fetch(url))
+          (idx, url, client.fetch(url))
         }
-      }.toDF("main_index", "body")
+      }.toDF("main_index", urlCol, "body")
   }
 
   /** S2 parse + J2: explode hits; entity-filter buckets fuzzy-matching
@@ -79,6 +80,7 @@ object Crawler {
   def candidateFilings(spark: SparkSession, jobs: DataFrame,
       fetcher: Clients.Fetcher = new Clients.StubFetcher): DataFrame = {
     val bodies = fetchBodies(spark, jobs, "search_url", fetcher)
+      .drop("search_url")
       .join(jobs.select(col("main_index"), col("norm_target"),
         col("norm_acquirer")), Seq("main_index"))
       .withColumn("parsed", from_json(col("body"), Sources.edgarHitsSchema))
@@ -122,7 +124,6 @@ object Crawler {
       names: DataFrame, fetcher: Clients.Fetcher,
       globalRate: Double = GlobalRatePerSec): DataFrame = {
     val bodies = fetchBodies(spark, candidates, "url", fetcher, globalRate)
-      .join(candidates, Seq("main_index"))
       .join(names, Seq("main_index"))
     val cleaned = bodies.withColumn("content",
       Normalize.cleanDocument(col("body")))

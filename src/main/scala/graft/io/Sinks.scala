@@ -102,8 +102,11 @@ object Sinks {
       else if (spreadNarrow) merged.repartition(cores, col("bucket"))
       else merged)
         .localCheckpoint()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // the write option, not the session conf: the caller's conf stays
+    // untouched, and InsertIntoHadoopFsRelationCommand reads the option
+    // first
     try materialized.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("bucket").parquet(path)
     finally materialized.unpersist()
   }

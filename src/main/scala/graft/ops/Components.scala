@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedPlanning
 
 /** Connected components over a near-dup pair graph — the step that turns
   * pairwise dedup output into an actionable keep/drop set (pick one
@@ -78,36 +79,20 @@ object Components {
     math.min(cur.toLong, (rows + SymRowsPerTask - 1) / SymRowsPerTask))
     .toInt
 
-  /** Run the round loop STATICALLY PLANNED at the derived width (r19,
-    * guide §1.2/§2.4 — the knnHnswWith descent treatment applied to the
-    * label rounds): inside a loop every frame is an eagerly
-    * checkpointed LogicalRDD with exact stats and the loop's own
-    * widths are row-derived, so adaptive planning has no decision left
-    * to make — but it still charged one stage-job per exchange and
-    * re-ran the small-side broadcasts every round (cross-query
-    * broadcast reuse does not exist). Pinning the session shuffle
-    * width to the loop's derived width keeps the non-adaptive
-    * exchanges from defaulting to the session's full width on KB
-    * rounds (r18 measured THAT failure mode as the 4x explosion when
-    * AQE was turned off globally: 32-wide static sorts per round over
-    * tiny frames). Both confs are saved/restored; the loop's outputs
-    * are materialized inside (every round checkpoints), so nothing
-    * leaks into a caller's lazy plan. Results are bit-identical —
-    * plan surgery only. */
-  private def staticRounds[T](sess: org.apache.spark.sql.SparkSession,
-      w: Int)(body: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val spKey = "spark.sql.shuffle.partitions"
-    val aqePrev = sess.conf.getOption(aqeKey)
-    val spPrev = sess.conf.getOption(spKey)
-    sess.conf.set(aqeKey, "false")
-    sess.conf.set(spKey, w.toString)
-    try body
-    finally {
-      aqePrev.fold(sess.conf.unset(aqeKey))(v => sess.conf.set(aqeKey, v))
-      spPrev.fold(sess.conf.unset(spKey))(v => sess.conf.set(spKey, v))
-    }
-  }
+  /** Planning overrides for a single-task round loop (r19, guide
+    * §1.2/§2.4 — the knnHnswWith descent treatment applied to the label
+    * rounds): inside the loop every frame is an eagerly checkpointed
+    * LogicalRDD with exact stats, so adaptive planning has no decision
+    * left to make — but it still charged one stage-job per exchange and
+    * re-ran the small-side broadcasts every round. The shuffle width is
+    * pinned to the loop's width (1) so the non-adaptive exchanges do
+    * not default to the session's full width on KB rounds (r18 measured
+    * THAT as a 4x explosion when AQE was turned off globally). Applied
+    * in a child session through [[ScopedPlanning]]; every round
+    * checkpoints, so results are bit-identical — plan surgery only. */
+  private val StaticSingleTask = Map(
+    "spark.sql.adaptive.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "1")
 
   /** Per-node component labels after `iters` min-label rounds:
     * (id, rep) with rep = min id within `iters` hops — the component
@@ -137,10 +122,11 @@ object Components {
     // parallel work and AQE's runtime view measured BETTER (multimodal
     // dense graph at w=4: +0.6 s under the static scope) — so wide
     // graphs keep adaptive planning.
-    val w = sym.rdd.getNumPartitions
-    if (w == 1) staticRounds(sym.sparkSession, w) {
-      propagateRounds(sym, iters)
-    } else propagateRounds(sym, iters)
+    if (sym.rdd.getNumPartitions == 1)
+      ScopedPlanning.run(sym.sparkSession, StaticSingleTask) { adopt =>
+        propagateRounds(adopt(sym), iters)
+      }
+    else propagateRounds(sym, iters)
   }
 
   private def propagateRounds(sym: DataFrame, iters: Int): DataFrame = {
@@ -283,7 +269,7 @@ object Components {
     var n = edges.count() // carried across rounds: one count job per round
     var round = 0
     var converged = false
-    // (the propagate static-rounds scope was tried here too and measured
+    // (the propagate single-task scope was tried here too and measured
     // SLOWER — d6d 3.89->4.55 same-batch even on the single-task d3
     // graph: the star loop's convergence machinery (count + exceptAll)
     // profits from adaptive planning — so the star rounds stay adaptive)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedPlanning
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]`) — driver north star.
@@ -971,9 +972,8 @@ object Similarity {
     * dup mining vs exhaustive enumeration); the d5d gate's in-gate
     * REQUIRE pins their dedup-VERDICT agreement at >= 90%, which is
     * the quantity a dedup pipeline consumes. The decision is logged
-    * to stderr and to the Spark job description so it is visible in
-    * any event-log/plan review. `forceRoute` pins a branch for gates
-    * and A/Bs; the n-driven default is the production path. */
+    * to stderr. `forceRoute` pins a branch for gates and A/Bs; the
+    * n-driven default is the production path. */
   def semanticDedup(targets: DataFrame, dim: Int, minCos: Double,
       k: Int = 5, routeCutoff: Long = SemDedupRouteCutoff,
       forceRoute: Option[String] = None): DataFrame = {
@@ -983,8 +983,6 @@ object Similarity {
       .getOrElse(s"n=$n ${if (n < routeCutoff) "<" else ">="} cutoff=$routeCutoff")
     System.err.println(s"[graft.semanticDedup] route=$route ($why, " +
       s"anchors: bench/scale_curve_r17.json semdedup_vs_brute)")
-    targets.sparkSession.sparkContext
-      .setJobDescription(s"semanticDedup route=$route ($why)")
     route match {
       case "brute" =>
         // spread the stream side of the all-pairs theta-join when the
@@ -1415,7 +1413,7 @@ object Similarity {
       prune(expanded, width)
     }
     // entry: exact argmax over the (tiny) top occupied layer
-    var beamDf = prune(q.select(col("qid")).crossJoin(entryIds), 1)
+    val entry = prune(q.select(col("qid")).crossJoin(entryIds), 1)
     // localCheckpoint every `hopsPerCheckpoint` hops: the beam is tiny
     // (queries x width rows) but an UNCUT multi-hop lineage compounds
     // into one enormous fused plan whose optimization + codegen
@@ -1449,18 +1447,16 @@ object Similarity {
     // per exchange PLUS re-broadcasts of t/q (broadcast reuse never
     // crosses the per-hop queries): 54 driver jobs for 4.8 s of task
     // time at gate scale, wall job-floor-bound. With adaptive planning
-    // off inside the descent scope each hop is ONE job. The final
-    // ranking is materialized inside the scope so the restored conf
-    // never leaks into a caller's lazy plan; results are bit-identical
-    // (plan surgery only).
-    val sess = queries.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = sess.conf.getOption(aqeKey)
-    sess.conf.set(aqeKey, "false")
-    try {
+    // off in the descent's child session ([[ScopedPlanning]]) each hop
+    // is ONE job. Every hop frame grows from the adopted entry beam, so
+    // the whole descent plans in the child; the final ranking is
+    // materialized there; results are bit-identical (plan surgery only).
+    ScopedPlanning.run(queries.sparkSession,
+        Map("spark.sql.adaptive.enabled" -> "false")) { adopt =>
+      var beam = adopt(entry)
       for (l <- maxOcc - 1 to 1 by -1; _ <- 1 to hops1Eff)
-        beamDf = cut(hop(beamDf, l, beam1Eff))
-      for (_ <- 1 to hops0) beamDf = cut(hop(beamDf, 0, beam0Eff))
+        beam = cut(hop(beam, l, beam1Eff))
+      for (_ <- 1 to hops0) beam = cut(hop(beam, 0, beam0Eff))
       // FILTERED SEARCH is the keep side (the post-filter discipline:
       // out-of-predicate nodes still ROUTE — dropping them from the
       // beams would strand descents whose region is dense in filtered
@@ -1468,7 +1464,7 @@ object Similarity {
       // set; widen beam0 when the predicate is very selective). The
       // beam side is tiny (queries x beam0), so the semi-join never
       // shuffles more than the beam.
-      val allowed = keep.fold(beamDf)(ids => beamDf.join(
+      val allowed = keep.fold(beam)(ids => beam.join(
         ids.select(col("tid")), Seq("tid"), "left_semi"))
       val survivors = exclude.fold(allowed)(dead => allowed.join(
         broadcast(dead.select(col("tid"))), Seq("tid"), "left_anti"))
@@ -1479,9 +1475,6 @@ object Similarity {
         .filter(col("rank") <= k)
         .select(col("qid"), col("rank"), col("tid"), col("cos"))
         .localCheckpoint()
-    } finally aqePrev match {
-      case Some(v) => sess.conf.set(aqeKey, v)
-      case None => sess.conf.unset(aqeKey)
     }
   }
 

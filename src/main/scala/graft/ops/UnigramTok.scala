@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedPlanning
 
 /** UNIGRAM-LM tokenizer (the SentencePiece family — Kudo 2018,
   * arXiv:1804.10959): a piece vocabulary scored by corpus frequency and a
@@ -48,33 +49,23 @@ object UnigramTok {
     * chars are always kept so every word stays segmentable. */
   val MultiPieces = 48
 
-  /** Run `body` with Catalyst constraint propagation OFF, restoring the
-    * session's prior setting after (r19, guide §4 "codegen-friendly
-    * expressions"): LogicalRDD PRESERVES its origin Dataset's
-    * constraints across localCheckpoint, so the Viterbi DP's per-level
-    * `length(w) >= i` filters compound through each level's 4-way union
-    * of prior levels into an exponentially nested inferred predicate —
-    * the final `eligible JOIN all ON w` then pushes a >64 KB boolean
-    * cascade onto the word-table scan. Measured per staging build: one
-    * janino "Code grows beyond 64 KB" compile failure (codegen falls
-    * back to INTERPRETED evaluation of the giant, semantically
-    * redundant filter) plus ~2 MiB broadcast task binaries. The
-    * inferred filter can only drop rows the join itself would drop, so
-    * disabling inference here changes no result — it just keeps the DP
-    * plans linear in MaxWordLen. Scoped: every frame the DP returns is
-    * eagerly checkpointed inside the scope, so nothing escapes lazily
-    * into the restored-conf world. */
-  private def withoutConstraintPropagation[T](
-      spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.constraintPropagation.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  /** The DP runs with Catalyst constraint propagation OFF, in a child
+    * session ([[ScopedPlanning]]) so the caller's conf is never written
+    * (r19, guide §4 "codegen-friendly expressions"): LogicalRDD
+    * PRESERVES its origin Dataset's constraints across localCheckpoint,
+    * so the Viterbi DP's per-level `length(w) >= i` filters compound
+    * through each level's 4-way union of prior levels into an
+    * exponentially nested inferred predicate — the final `eligible JOIN
+    * all ON w` then pushes a >64 KB boolean cascade onto the word-table
+    * scan. Measured per staging build: one janino "Code grows beyond
+    * 64 KB" compile failure (codegen falls back to INTERPRETED
+    * evaluation of the giant, semantically redundant filter) plus ~2 MiB
+    * broadcast task binaries. The inferred filter can only drop rows the
+    * join itself would drop, so disabling inference here changes no
+    * result — it just keeps the DP plans linear in MaxWordLen. Every
+    * frame the DP returns is eagerly checkpointed inside the scope. */
+  private val NoConstraintPropagation =
+    Map("spark.sql.constraintPropagation.enabled" -> "false")
 
   /** Distinct corpus words with occurrence counts: (w, c). */
   def words(docs: DataFrame, textCol: String): DataFrame =
@@ -112,12 +103,14 @@ object UnigramTok {
     * first i chars; level i draws from levels i-MaxPiece..i-1 through
     * the piece join and reduces with a max-of-struct aggregation. */
   def segments(w: DataFrame, pieces: DataFrame): DataFrame =
-      withoutConstraintPropagation(w.sparkSession) {
+      ScopedPlanning.run(w.sparkSession, NoConstraintPropagation) { adopt =>
     // checkpoint the DP inputs once: every level references them, and an
     // unmaterialized piece plan would otherwise be re-planned into every
     // level's tree
-    val eligible = w.filter(length(col("w")) <= MaxWordLen).localCheckpoint()
-    val p = broadcast(pieces.select(col("p"), col("sc")).localCheckpoint())
+    val eligible =
+      adopt(w).filter(length(col("w")) <= MaxWordLen).localCheckpoint()
+    val p = broadcast(
+      adopt(pieces).select(col("p"), col("sc")).localCheckpoint())
     // dp levels; levels(i) holds rows (w, pos=i, best, np). EVERY level
     // is checkpointed: each references up to MaxPiece prior levels, so
     // un-materialized levels would branch the plan MaxPiece-ways per
@@ -166,9 +159,11 @@ object UnigramTok {
     * the word table; the carried array is <= MaxWordLen strings.
     * Returns (w, c, n_pieces, total_score, ps). */
   def segmentsWithPieces(w: DataFrame, pieces: DataFrame): DataFrame =
-      withoutConstraintPropagation(w.sparkSession) {
-    val eligible = w.filter(length(col("w")) <= MaxWordLen).localCheckpoint()
-    val p = broadcast(pieces.select(col("p"), col("sc")).localCheckpoint())
+      ScopedPlanning.run(w.sparkSession, NoConstraintPropagation) { adopt =>
+    val eligible =
+      adopt(w).filter(length(col("w")) <= MaxWordLen).localCheckpoint()
+    val p = broadcast(
+      adopt(pieces).select(col("p"), col("sc")).localCheckpoint())
     val v0 = eligible.select(col("w"), lit(0).as("pos"),
       lit(0L).as("best"), lit(0).as("np"),
       array().cast("array<string>").as("ps")).localCheckpoint()

@@ -73,6 +73,23 @@ class CrawlerSpec extends SparkSpec {
     assert(byDeal(1L).size == 2)
   }
 
+  test("validatedDocs keeps each body with its own URL: of two candidate " +
+      "URLs only the one serving a valid filing survives") {
+    val valid = "https://www.sec.gov/Archives/edgar/data/1/valid.htm"
+    val other = "https://www.sec.gov/Archives/edgar/data/1/other.htm"
+    val fetcher = new EndToEndSpec.MapFetcher(Map(
+      valid -> ("<html><body><p>Proposed merger of Prime Response Inc " +
+        "with Chordiant Software Inc.</p></body></html>"),
+      other -> "<html><body><p>Unrelated annual report.</p></body></html>"))
+    val cands = Seq((0L, valid), (0L, other)).toDF("main_index", "url")
+    val names = Seq((0L, "prime response", "chordiant software"))
+      .toDF("main_index", "norm_target", "norm_acquirer")
+    val docs = Crawler.validatedDocs(spark, cands, names, fetcher,
+      globalRate = 1e6).collect()
+    assert(docs.map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((0L, valid)))
+  }
+
   test("X1 fallback rescues docs the cascade missed") {
     val withSection = "Filler intro paragraph here.\n\n" +
       "Background of the Merger\n\n" +

@@ -61,7 +61,10 @@ class IoSpec extends SparkSpec {
     val df = (0L until 250L).map(i => (i, s"v0-$i")).toDF("main_index", "content")
     Sinks.writeBucketed(df, dir, "main_index")
     val updates = Seq((42L, "v1-42"), (137L, "v1-137")).toDF("main_index", "content")
+    val conf0 = spark.conf.getAll
     Sinks.mergeUpdate(spark, dir, "main_index", updates, "content")
+    // dynamic overwrite rides the write option; the session conf is untouched
+    assert(spark.conf.getAll == conf0)
     val after = spark.read.parquet(dir)
     assert(after.filter($"main_index" === 42L).collect()
       .head.getAs[String]("content") == "v1-42")
