@@ -108,13 +108,14 @@ object Bench {
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not persist full line: $e")
     }
-    // FINAL line: a compact self-sufficient summary. The driver's
-    // BENCH_rN.json keeps only a ~2,000-char stdout tail, so the full
-    // 292-query line above never survives capture ("parsed": null every
-    // round). This line — total, per-family subtotals, worst-5 queries —
-    // is sized well under the cap and printed LAST so the tail always
-    // contains one parseable record; orchestrators that want the complete
-    // per-query data take the FIRST metric line (bench_families.py does).
+    // FINAL line: a compact self-sufficient summary. A capture that keeps
+    // only a ~2,000-char stdout tail (the round artifacts under
+    // history/BENCH_rN.json did) never holds the full 292-query line
+    // above ("parsed": null every round). This line — total, per-family
+    // subtotals, worst-5 queries — is sized well under the cap and printed
+    // LAST so the tail always contains one parseable record; orchestrators
+    // that want the complete per-query data take the FIRST metric line
+    // (bench_families.py does).
     // Its metric name is "total_summary" — distinct from the full line's —
     // so no consumer can mistake the worst-5 "queries" map for complete
     // per-query data; and it prints AFTER spark.stop() with sbt's

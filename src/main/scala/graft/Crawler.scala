@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.GraftFunctions._
 import graft.io.{Clients, Sources, TokenBucket}
 import graft.ops.{Normalize, Rank}
+import graft.util.Lineage
 
 /** The crawler stage (SURVEY.md §3.1) as a declarative lineage:
   * deals -> date-window jobs (F2/F6) -> anti-join resume (J4) -> rate-limited
@@ -49,18 +50,25 @@ object Crawler {
   def resume(jobs: DataFrame, done: DataFrame): DataFrame =
     jobs.join(done, Seq("main_index"), "left_anti")
 
+  /** Fetch width: the session's default parallelism, fixed before the
+    * plan runs so the per-partition rate is derived from the width that
+    * actually executes. */
+  def fetchPartitions(spark: SparkSession): Int =
+    math.max(1, spark.sparkContext.defaultParallelism)
+
   /** S2+S4: fetch each job's URL under a per-partition token bucket and
     * return (main_index, `urlCol`, body): the URL stays with its body, so
-    * a job with several URLs never needs a join to tell them apart. */
+    * a job with several URLs never needs a join to tell them apart. The
+    * jobs are spread round-robin over [[fetchPartitions]] partitions, a
+    * width AQE does not coalesce, so `globalRate` holds across them.
+    * Building the frame runs nothing. */
   def fetchBodies(spark: SparkSession, jobs: DataFrame, urlCol: String,
       fetcher: Clients.Fetcher, globalRate: Double = GlobalRatePerSec): DataFrame = {
     import spark.implicits._
-    // partition count from the OPTIMIZED physical plan (queryExecution
-    // .toRdd) — `df.rdd` would build and cache a separate deserialized
-    // RDD lineage of the whole DataFrame just to read one number
-    val n = math.max(1, jobs.queryExecution.toRdd.getNumPartitions)
+    val n = fetchPartitions(spark)
     val rate = TokenBucket.perPartitionRate(globalRate, n)
     jobs.select(col("main_index"), col(urlCol).as("__url"))
+      .repartition(n)
       .as[(Long, String)]
       .mapPartitions { rows =>
         lazy val bucket = new TokenBucket(rate)
@@ -76,14 +84,17 @@ object Crawler {
     * either company (partial_ratio > 90, CrawlerSupport.py:138-147) gate
     * the hits to those entities' CIKs (F15); jobs with no matching entity
     * fall back to the unfiltered hit list (CrawlerSupport.py:247-314).
-    * Archive URLs built (F16) and deduped (U2). */
+    * Archive URLs built (F16) and deduped (U2). Runs the search fetch
+    * when called: the parsed bodies feed both the gate and the hits, so
+    * they are cut once and each search URL is fetched once. */
   def candidateFilings(spark: SparkSession, jobs: DataFrame,
       fetcher: Clients.Fetcher = new Clients.StubFetcher): DataFrame = {
-    val bodies = fetchBodies(spark, jobs, "search_url", fetcher)
+    val bodies = Lineage.cut(fetchBodies(spark, jobs, "search_url", fetcher)
       .drop("search_url")
       .join(jobs.select(col("main_index"), col("norm_target"),
         col("norm_acquirer")), Seq("main_index"))
       .withColumn("parsed", from_json(col("body"), Sources.edgarHitsSchema))
+      .drop("body"))
 
     // J2 fuzzy entity gate: CIKs of entity buckets matching either name
     val matchedCiks = bodies
@@ -141,9 +152,12 @@ object Crawler {
   /** X1 composition (src/crawler/Processor.py:470-480): docs where the
     * heuristic cascade finds no Background candidate go to the LLM fallback
     * classifier; docs it accepts rejoin the located set. Returns
-    * (main_index, url, content, via) with via in {"heuristic", "llm"}. */
-  def locateWithFallback(spark: SparkSession, docs: DataFrame,
+    * (main_index, url, content, via) with via in {"heuristic", "llm"}.
+    * Runs `docs` when called: the chunk, hit and missed branches all read
+    * it, so it is cut once and each filing is fetched and cleaned once. */
+  def locateWithFallback(spark: SparkSession, docsIn: DataFrame,
       llm: Clients.LlmExtractor = new Clients.StubBackgroundClassifier): DataFrame = {
+    val docs = Lineage.cut(docsIn)
     val chunks = Pipeline.chunk(
       docs.select(col("main_index").as("doc_id"), col("content")))
     val located = Pipeline.candidates(chunks)

@@ -49,9 +49,9 @@ object ScaleGen {
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def src(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(df: => DataFrame, t: String): Unit =

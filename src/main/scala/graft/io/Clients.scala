@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ops.TextImpl
+import graft.util.Lineage
 
 /** Pluggable external-service traits (SURVEY.md §2.8 X1-X4) with
   * deterministic stub implementations so the whole engine runs hermetically
@@ -13,6 +14,12 @@ import graft.ops.TextImpl
   * per-partition client (never per-row connections), mirroring the
   * reference's per-process model loading
   * (src/seperator/SeperatorHandler.py:37-39).
+  *
+  * A client's output is cut once ([[graft.util.Lineage.cut]]) where it
+  * fans out: Spark re-runs a `mapPartitions` for every plan branch that
+  * reads it and for a range sort's sampling job, so an uncut fan-out
+  * makes the same remote call several times per row. A frame read once
+  * is not cut, since every cut costs a job.
   */
 object Clients {
 
@@ -147,7 +154,10 @@ object Clients {
   /** X2 + J5 + O1: the Identifier stage — extracted sections -> LLM
     * structured extraction (mapPartitions, per-partition client) ->
     * from_json -> enum-checked 4-field record, sorted by index
-    * (src/identifier/InitiatorIdentifier.py:52-83,166). */
+    * (src/identifier/InitiatorIdentifier.py:52-83,166). Runs the LLM when
+    * called: its output is cut before the sort, whose range sampling (and
+    * that of any later sort, such as `Sinks.orderedCsv`'s) would otherwise
+    * prompt every section again. */
   def identifyInitiators(spark: SparkSession, sections: DataFrame,
       llm: LlmExtractor = new StubLlmExtractor): DataFrame = {
     import spark.implicits._
@@ -157,7 +167,7 @@ object Clients {
           lazy val client = llm // per-partition lazy init
           rows.map { case (id, content) => (id, client.extract(content)) }
         }
-    raw.toDF("INDEX", "json")
+    val records = raw.toDF("INDEX", "json")
       .withColumn("parsed", from_json(col("json"), initiatorSchema))
       .select(col("INDEX"),
         col("parsed.initiator").as("INITIATOR"),
@@ -165,7 +175,7 @@ object Clients {
         col("parsed.type_of_initiation").as("TYPE_OF_INITIATION"),
         col("parsed.stated_reasons").as("REASON"))
       .filter(col("TYPE_OF_INITIATION").isin(initiationTypes: _*))
-      .orderBy(col("INDEX"))
+    Lineage.cut(records).orderBy(col("INDEX"))
   }
 
   /** X3 integration: add an embedding column via a pluggable embedder,

@@ -973,10 +973,13 @@ object Similarity {
     * REQUIRE pins their dedup-VERDICT agreement at >= 90%, which is
     * the quantity a dedup pipeline consumes. The decision is logged
     * to stderr. `forceRoute` pins a branch for gates and A/Bs; the
-    * n-driven default is the production path. */
-  def semanticDedup(targets: DataFrame, dim: Int, minCos: Double,
+    * n-driven default is the production path. `targets` is cut when
+    * called (one job), so an upstream embedder runs once per row although
+    * the count and both join sides read it. */
+  def semanticDedup(targetsIn: DataFrame, dim: Int, minCos: Double,
       k: Int = 5, routeCutoff: Long = SemDedupRouteCutoff,
       forceRoute: Option[String] = None): DataFrame = {
+    val targets = graft.util.Lineage.cut(targetsIn)
     val n = targets.count()
     val route = forceRoute.getOrElse(semanticDedupRoute(n, routeCutoff))
     val why = forceRoute.map(_ => "forced")
