@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): times every registered query at
   * SPARK_GRAFT_SF_DIR and prints one JSON line. A warm-up action runs
@@ -7,18 +7,17 @@ import org.apache.spark.sql.SparkSession
   * query happens to run first.
   */
 object Bench {
+  /** Seconds `body` took, or what it threw: a query that fails is
+    * recorded as a failure, never as a time. */
+  def timed(body: => Any): Either[Throwable, Double] = {
+    val t0 = System.nanoTime()
+    try { body; Right((System.nanoTime() - t0) / 1e9) }
+    catch { case NonFatal(e) => Left(e) }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
+    val spark = GraftSession.build()
     // warm-up: touch every table + exercise codegen once on the flagship
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
@@ -37,7 +36,7 @@ object Bench {
         try { SparkEntry.queries(q)(spark, tiny.getPath).count() }
         catch { // NonFatal only: an OOM/linkage error in warm-up must not
                 // resurface confusingly in the timed runs
-          case scala.util.control.NonFatal(e) =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] warm-up of $q failed: $e")
         }
       }
@@ -70,29 +69,34 @@ object Bench {
     }
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
-    for (_ <- 1 to reps; (name, fn) <- named) {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
-      catch {
-        case scala.util.control.NonFatal(e) =>
+    // a query that threw in any pass is listed with its error and gets no
+    // time: it is neither rerun nor counted in the min, median or total
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    for (_ <- 1 to reps; (name, fn) <- named if !failed.contains(name))
+      timed(fn(spark, sfDir).count()) match {
+        case Right(sec) => times(name) = sec :: times(name)
+        case Left(e) =>
           System.err.println(s"[bench] $name failed: $e")
+          failed(name) = e.toString.linesIterator.nextOption()
+            .getOrElse("").take(200)
       }
-      times(name) = (System.nanoTime() - t0) / 1e9 :: times(name)
-    }
+    val ok = named.map(_._1).filterNot(failed.contains)
     // headline = min-of-reps (steady state); median emitted alongside so
     // round-over-round deltas can separate signal from scheduler noise
     def median(xs: List[Double]): Double = {
       val s = xs.sorted; s((s.length - 1) / 2)
     }
-    val results = named.map { case (name, _) => name -> times(name).min }
-    def jmap(m: Seq[(String, Double)]) = m
+    val results = ok.map(name => name -> times(name).min)
+    def jmap(m: Seq[(String, Any)]) = m
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val qs = jmap(results)
-    val med = jmap(named.map { case (name, _) => name -> median(times(name)) })
+    val med = jmap(ok.map(name => name -> median(times(name))))
+    val failedJson = jmap(failed.toSeq.map { case (k, e) =>
+      k -> Verify.jsonString(e) })
     val total = results.map(_._2).sum
     val filterTag = filterPrefixes.map(ps =>
       ",\"filter\":\"" + ps.mkString(",") + "\"").getOrElse("")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps$filterTag,"queries":$qs,"queries_median":$med,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps$filterTag,"queries":$qs,"queries_median":$med,"failed":$failedJson,"sf":"$sfDir"}"""
     println(line)
     // the driver's artifact keeps only a truncated log tail; persist the
     // COMPLETE line so every per-query min+median stays readable
@@ -105,7 +109,7 @@ object Bench {
       val fname = if (filterPrefixes.isDefined) "filtered_latest.json"
                   else "full_latest.json"
       java.nio.file.Files.writeString(out.resolve(fname), line)
-    } catch { case scala.util.control.NonFatal(e) =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not persist full line: $e")
     }
     // FINAL line: a compact self-sufficient summary. A capture that keeps
@@ -141,6 +145,7 @@ object Bench {
       s"""{"metric":"total_summary","value":${math.rint(total * 100) / 100},""" +
       s""""unit":"sec","reps":$reps$filterTag,"n_queries":${results.size},""" +
       s""""queries":${jmap(worst)},"families":${jmap(fams)},""" +
+      s""""failed":$failedJson,""" +
       s""""note":"worst-5 in queries; full per-query data in """ +
       s"""bench/full_latest.json","sf":"$sfDir"}"""
     spark.stop()

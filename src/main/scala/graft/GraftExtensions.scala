@@ -2,45 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graft._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point — the injection-based alternative to
   * [[GraftFunctions.register]] for sessions built with
   * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`.
+  * `spark.sql.extensions=graft.GraftExtensions`. Both install the same
+  * function table, [[GraftFunctions.sqlFunctions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  private def info(name: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, name)
-
-  private def lit(e: Expression): Any = e match {
-    case Literal(v, _) => v
-    case other =>
-      throw new IllegalArgumentException(s"expected literal, got $other")
-  }
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("fuzz_ratio"), info("fuzz_ratio"),
-      es => FuzzRatio(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("fuzz_partial_ratio"),
-      info("fuzz_partial_ratio"), es => FuzzPartialRatio(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("nfkc_ascii"), info("nfkc_ascii"),
-      es => NfkcAscii(es.head)))
-    ext.injectFunction((FunctionIdentifier("month_shift_reset"),
-      info("month_shift_reset"),
-      es => MonthShiftReset(es.head, es(1), es(2))))
-    ext.injectFunction((FunctionIdentifier("chunk_split"), info("chunk_split"),
-      es => ChunkSplit(es.head, lit(es(1)).asInstanceOf[Int],
-        lit(es(2)).asInstanceOf[Int])))
-    ext.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
-      es => SimHash64(es.head)))
-    ext.injectFunction((FunctionIdentifier("scaled_dot"), info("scaled_dot"),
-      es => ScaledDot(es.head, es(1))))
-    ext.injectFunction((FunctionIdentifier("dedup_lines"), info("dedup_lines"),
-      es => DedupLines(es.head)))
-    ext.injectFunction((FunctionIdentifier("normalize_quotes"),
-      info("normalize_quotes"), es => NormalizeQuotes(es.head)))
+    GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
     ext.injectOptimizerRule(_ => graft.plans.ReorderCostlyConjuncts)
   }
 }

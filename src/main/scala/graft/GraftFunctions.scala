@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.graft.{BackgroundPassage, ChunkSplit, CompanyNameNorm, DedupLines, ExtractOrgs, FuzzPartialRatio, FuzzRatio, GunzipText, GzipPayload, HtmlToText, JpegColorDHash, JpegDHash, MonthShiftReset, NfkcAscii, PngDHash, PseudoEmbedding, SimHash64, WavEnergyWindows, WavFingerprint, Y4mLumaSumArray, internal}
+import org.apache.spark.sql.graft.{BackgroundPassage, ChunkSplit, CompanyNameNorm, DedupLines, ExtractOrgs, FuzzPartialRatio, FuzzRatio, GunzipText, GzipPayload, HtmlToText, JpegColorDHash, JpegDHash, MonthShiftReset, NfkcAscii, NormalizeQuotes, PngDHash, PseudoEmbedding, ScaledDot, SimHash64, WavEnergyWindows, WavFingerprint, Y4mLumaSumArray, internal}
 
 /** Column-API + SQL surface for the engine's custom Catalyst expressions.
   *
@@ -56,56 +56,50 @@ object GraftFunctions {
   /** 64-bit SimHash near-dup fingerprint. */
   def simhash64(c: Column): Column = col(SimHash64(ex(c)))
 
+  private def lit(e: Expression): Any = e match {
+    case Literal(v, _) => v
+    case other => throw new IllegalArgumentException(
+      s"expected literal argument, got $other")
+  }
+
+  /** Every SQL name the engine exposes, with its expression builder.
+    * [[register]] and [[GraftExtensions]] both install this table. */
+  private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] =
+    Seq(
+      "fuzz_ratio" -> (es => FuzzRatio(es.head, es(1))),
+      "fuzz_partial_ratio" -> (es => FuzzPartialRatio(es.head, es(1))),
+      "nfkc_ascii" -> (es => NfkcAscii(es.head)),
+      "month_shift_reset" -> (es => MonthShiftReset(es.head, es(1), es(2))),
+      "chunk_split" -> (es => ChunkSplit(es.head,
+        lit(es(1)).asInstanceOf[Int], lit(es(2)).asInstanceOf[Int])),
+      "background_passage" -> (es =>
+        BackgroundPassage(es.head, lit(es(1)).asInstanceOf[Boolean])),
+      "company_name_norm" -> (es => CompanyNameNorm(es.head)),
+      "html_to_text" -> (es => HtmlToText(es.head)),
+      "dedup_lines" -> (es => DedupLines(es.head)),
+      "normalize_quotes" -> (es => NormalizeQuotes(es.head)),
+      "extract_orgs" -> (es => ExtractOrgs(es.head)),
+      "pseudo_embedding" -> (es =>
+        PseudoEmbedding(es.head, lit(es(1)).asInstanceOf[Int])),
+      "simhash64" -> (es => SimHash64(es.head)),
+      "scaled_dot" -> (es => ScaledDot(es.head, es(1))),
+      // media codec surface: decode/hash opaque binary payloads in SQL
+      "png_dhash" -> (es => PngDHash(es.head)),
+      "wav_fingerprint" -> (es => WavFingerprint(es.head)),
+      "wav_energy_windows" -> (es =>
+        WavEnergyWindows(es.head, lit(es(1)).asInstanceOf[Int])),
+      "y4m_luma_sums" -> (es => Y4mLumaSumArray(es.head)),
+      "jpeg_dhash" -> (es => JpegDHash(es.head)),
+      "jpeg_color_dhash" -> (es => JpegColorDHash(es.head)),
+      "gzip_payload" -> (es => GzipPayload(es.head)),
+      "gunzip_text" -> (es => GunzipText(es.head)))
+
   /** Register SQL names for `spark.sql` use; safe to call repeatedly. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def lit(e: Expression): Any = e match {
-      case Literal(v, _) => v
-      case other => throw new IllegalArgumentException(
-        s"expected literal argument, got $other")
+    sqlFunctions.foreach { case (name, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
-    reg.createOrReplaceTempFunction("fuzz_ratio",
-      es => FuzzRatio(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("fuzz_partial_ratio",
-      es => FuzzPartialRatio(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("nfkc_ascii",
-      es => NfkcAscii(es.head), "built-in")
-    reg.createOrReplaceTempFunction("month_shift_reset",
-      es => MonthShiftReset(es.head, es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("chunk_split",
-      es => ChunkSplit(es.head,
-        lit(es(1)).asInstanceOf[Int], lit(es(2)).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("background_passage",
-      es => BackgroundPassage(es.head, lit(es(1)).asInstanceOf[Boolean]), "built-in")
-    reg.createOrReplaceTempFunction("company_name_norm",
-      es => CompanyNameNorm(es.head), "built-in")
-    reg.createOrReplaceTempFunction("html_to_text",
-      es => HtmlToText(es.head), "built-in")
-    reg.createOrReplaceTempFunction("dedup_lines",
-      es => DedupLines(es.head), "built-in")
-    reg.createOrReplaceTempFunction("extract_orgs",
-      es => ExtractOrgs(es.head), "built-in")
-    reg.createOrReplaceTempFunction("pseudo_embedding",
-      es => PseudoEmbedding(es.head, lit(es(1)).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64(es.head), "built-in")
-    // media codec surface: decode/hash opaque binary payloads in SQL
-    reg.createOrReplaceTempFunction("png_dhash",
-      es => PngDHash(es.head), "built-in")
-    reg.createOrReplaceTempFunction("wav_fingerprint",
-      es => WavFingerprint(es.head), "built-in")
-    reg.createOrReplaceTempFunction("wav_energy_windows",
-      es => WavEnergyWindows(es.head, lit(es(1)).asInstanceOf[Int]), "built-in")
-    reg.createOrReplaceTempFunction("y4m_luma_sums",
-      es => Y4mLumaSumArray(es.head), "built-in")
-    reg.createOrReplaceTempFunction("jpeg_dhash",
-      es => JpegDHash(es.head), "built-in")
-    reg.createOrReplaceTempFunction("jpeg_color_dhash",
-      es => JpegColorDHash(es.head), "built-in")
-    reg.createOrReplaceTempFunction("gzip_payload",
-      es => GzipPayload(es.head), "built-in")
-    reg.createOrReplaceTempFunction("gunzip_text",
-      es => GunzipText(es.head), "built-in")
     // cost-based conjunct ordering (idempotent to re-add)
     if (!spark.experimental.extraOptimizations
         .contains(graft.plans.ReorderCostlyConjuncts)) {

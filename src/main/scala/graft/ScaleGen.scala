@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of the driver's sf0.1 testdata for the
@@ -43,15 +43,7 @@ object ScaleGen {
     // nobody reads would dominate the generation wall
     val tables = args.lift(3).map(_.split(',').toSet)
     def wanted(t: String) = tables.forall(_.contains(t))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     def src(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(df: => DataFrame, t: String): Unit =

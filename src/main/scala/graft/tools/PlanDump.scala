@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for named queries to files — the r18
   * optimization round's evidence trail (plans/r18/<q>_{before,after}.txt).
   *
@@ -19,16 +17,7 @@ object PlanDump {
     val names: Seq[String] =
       if (args.length > 3) args(3).split(',').map(_.trim).filter(_.nonEmpty).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftFunctions.register(spark)
+    val spark = graft.GraftSession.build()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (n <- names) {
       try {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage profiler for a declared query (guide §1 "measure first",
   * empirical view): runs `name`(sfDir).count() `reps` times and prints,
@@ -21,17 +20,7 @@ object QProfile {
     val sfDir = args(0)
     val names = args(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ADAPTIVE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftFunctions.register(spark)
+    val spark = graft.GraftSession.build()
 
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -62,7 +51,6 @@ object QProfile {
           stages.clear(); jobs.set(0)
           spark.sparkContext.addSparkListener(listener)
         }
-        spark.sparkContext.setJobDescription(s"$name rep$r")
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9

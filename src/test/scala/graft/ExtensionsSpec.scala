@@ -65,10 +65,22 @@ class ExtensionsSpec extends SparkSpec {
     assert(rows.forall(_.getString(2).length <= 12))
   }
 
-  test("GraftExtensions injection function compiles against the public API") {
-    // builder-time injection: applying to a fresh extensions object must
-    // register every function + the optimizer rule without throwing
-    new GraftExtensions().apply(new SparkSessionExtensions)
+  test("GraftExtensions injects exactly the functions register installs") {
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    new GraftExtensions().apply(new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    })
+    val s = spark.newSession()
+    def names = s.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).toSet
+    val builtin = names
+    GraftFunctions.register(s)
+    val installed = names -- builtin
+    assert(installed.nonEmpty)
+    assert(injected.sorted.toSeq == installed.toSeq.sorted)
   }
 
   test("register is idempotent for the optimizer rule") {

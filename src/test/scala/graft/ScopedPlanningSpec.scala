@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.jdk.CollectionConverters._
@@ -142,21 +142,40 @@ class ScopedPlanningSpec extends SparkSpec {
     assert(s.conf.get(Aqe) == "true")
   }
 
-  test("no operator under ops/ or io/ writes the session conf or the job " +
-      "description") {
-    val banned = Seq(".conf.set(", ".conf.unset(", "setJobDescription(")
-    val roots = Seq("src/main/scala/graft/ops", "src/main/scala/graft/io")
-      .map(Paths.get(_))
-    assert(roots.forall(Files.isDirectory(_)))
-    val hits = roots.flatMap { r =>
-      val files = Files.walk(r)
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-      finally files.close()
-    }.flatMap { f =>
-      Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if banned.exists(line.contains) =>
-          s"$f:${i + 1}: ${line.trim}"
+  /** `file:line: text` of every line of a `.scala` file under `root`
+    * that `hit` accepts. */
+  private def sourceHits(root: String)(hit: (Path, String) => Boolean)
+      : Seq[String] = {
+    val r = Paths.get(root)
+    assert(Files.isDirectory(r))
+    val files = Files.walk(r)
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if hit(f, line) => s"$f:${i + 1}: ${line.trim}"
+        }
       }
+    finally files.close()
+  }
+
+  private def named(f: Path, names: String*): Boolean =
+    names.contains(f.getFileName.toString)
+
+  test("nothing under src/main writes the session conf or the job " +
+      "description, outside ScopedPlanning and the two nanosAsLong reads") {
+    val banned = Seq(".conf.set(", ".conf.unset(", "setJobDescription(")
+    val hits = sourceHits("src/main/scala") { (f, line) =>
+      banned.exists(line.contains) && !named(f, "ScopedPlanning.scala") &&
+        !(named(f, "Tables.scala", "StreamOps.scala") &&
+          line.contains("spark.sql.legacy.parquet.nanosAsLong"))
+    }
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("GraftSession holds the only SparkSession builder under src/") {
+    val builder = """SparkSession\s*\.\s*builder\b""".r
+    val hits = sourceHits("src") { (f, line) =>
+      builder.findFirstIn(line).isDefined && !named(f, "GraftSession.scala")
     }
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
