@@ -153,6 +153,7 @@ def run_batch(batch, sf, cpus, reps, mem):
     cmd += ["-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
             f"-Xmx{mem}",
             "-cp", os.path.join(REPO, "target/scala-2.13/classes")
+            + ":" + os.path.join(REPO, "src/main/resources")
             + ":/opt/spark/jars/*",
             "graft.Bench"]
     t0 = time.time()

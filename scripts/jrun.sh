@@ -16,4 +16,5 @@ ARGS=()
 for p in "${PKGS[@]}"; do ARGS+=(--add-opens "$p=ALL-UNNAMED"); done
 exec java "${ARGS[@]}" -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC "-Xmx$MEM" \
-  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$REPO/target/scala-2.13/classes:$REPO/src/main/resources:/opt/spark/jars/*" \
+  "$@"

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.GraftFunctions._
-import graft.ops.{Assemble, Normalize, Rank, TextImpl}
+import graft.ops.{Assemble, Normalize, Rank, Scale, TextImpl}
 
 /** The flagship lineage (SURVEY.md §3): document -> chunk -> header cascade
   * -> hybrid rank -> top-1 -> window assembly -> dedup -> validate/enrich ->
@@ -90,15 +90,7 @@ object Pipeline {
     // doc_id partitioning anyway, and sharing one Exchange lets Spark's
     // ReuseExchange evaluate the chunker ONCE instead of once per consumer
     // — the scale-correct alternative to caching the chunk table.
-    // width-pinned (REPARTITION_BY_NUM is not AQE-coalescible): chunk
-    // rows are ~KB so AQE's byte-based coalescing packed the exchange to
-    // ONE task, serializing the cascade/rank kernels that run on top of
-    // it (measured r19: 0.79 s single-task stage over 5000 chunks).
-    // Pinning at the session shuffle width spreads the per-chunk kernels
-    // at any scale (guide §2.5: partition by work, not bytes).
-    val chunks = chunk(docs, chunkSize, overlap).repartition(
-      docs.sparkSession.sessionState.conf.numShufflePartitions,
-      col("doc_id"))
+    val chunks = Scale.spread(chunk(docs, chunkSize, overlap), col("doc_id"))
     val winners = rank(candidates(chunks))
     val assembled = Assemble.assemblePassage(chunks, winners)
       .join(names, Seq("doc_id"))

@@ -72,13 +72,6 @@ object Components {
     if (width >= cur) sym else sym.coalesce(width.toInt)
   }
 
-  /** [[sizedSym]]'s width rule for a generic checkpointed frame: the
-    * row-derived partition count its consumers should run at (never
-    * wider than the current split). */
-  private def sizedWidth(cur: Int, rows: Long): Int = math.max(1L,
-    math.min(cur.toLong, (rows + SymRowsPerTask - 1) / SymRowsPerTask))
-    .toInt
-
   /** Planning overrides for a single-task round loop (r19, guide
     * §1.2/§2.4 — the knnHnswWith descent treatment applied to the label
     * rounds): inside the loop every frame is an eagerly checkpointed
@@ -173,8 +166,6 @@ object Components {
       labels = next.select(col("id"), col("rep"))
       round += step
     }
-    if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-      System.err.println(s"[propagate] rounds=$round converged=$converged")
     labels
   }
 
@@ -233,16 +224,15 @@ object Components {
     // a (src,dst) distinct exchange PLUS a (src) aggregation exchange
     // per phase, each a separate AQE stage job (the round loop is
     // job-floor-bound: 72 jobs for 2.4 s of stage wall, measured).
-    // Width derived from the carried edge count, never a constant.
-    def sym(e: DataFrame, w: Int): DataFrame =
-      e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .filter(col("src") =!= col("dst"))
-        .repartition(w, col("src")).distinct()
+    def sym(e: DataFrame): DataFrame =
+      Scale.spread(
+        e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+          .filter(col("src") =!= col("dst")), col("src")).distinct()
     // m(u) over the CURRENT symmetric edge set
     def mins(e: DataFrame): DataFrame =
       e.groupBy(col("src")).agg(min(col("dst")).as("__mn"))
         .select(col("src"), least(col("src"), col("__mn")).as("m"))
-    def phase(e: DataFrame, large: Boolean, w: Int): DataFrame = {
+    def phase(e: DataFrame, large: Boolean): DataFrame = {
       val joined = e.join(mins(e), "src")
       val hooked =
         if (large)
@@ -252,20 +242,12 @@ object Components {
           joined.filter(col("dst") <= col("src") && col("dst") =!= col("m"))
             .select(col("dst").as("src"), col("m").as("dst"))
             .union(joined.select(col("src"), col("m").as("dst")))
-      sym(hooked, w)
+      sym(hooked)
     }
-    // materialize the pair input once and size the initial distinct's
-    // map side by row count (r19, the [[sizedSym]] rationale): the pair
-    // cache's 32 files union-double into a 64-task map stage of ~KB
-    // data otherwise (QProfile r19: 0.9 s wall / 24.8 s task time on
-    // 36k rows). coalesce is narrow — no extra exchange.
-    val sessionPar =
-      pairs.sparkSession.sessionState.conf.numShufflePartitions
-    var edges = {
-      val e0 = pairs.select(col("id_1").as("src"), col("id_2").as("dst"))
-        .localCheckpoint()
-      sym(e0, sizedWidth(sessionPar, 2L * e0.count())).localCheckpoint()
-    }
+    // materialize the pair input once: sym reads it twice
+    val e0 = pairs.select(col("id_1").as("src"), col("id_2").as("dst"))
+      .localCheckpoint()
+    var edges = sym(e0).localCheckpoint()
     var n = edges.count() // carried across rounds: one count job per round
     var round = 0
     var converged = false
@@ -274,10 +256,7 @@ object Components {
     // graph: the star loop's convergence machinery (count + exceptAll)
     // profits from adaptive planning — so the star rounds stay adaptive)
     while (round < maxRounds && !converged) {
-      // the phase width rides the carried count: edge sets only shrink,
-      // so the round's exchanges stay sized to the data they move
-      val w = sizedWidth(sessionPar, 2L * n)
-      val next = phase(phase(edges, large = true, w), large = false, w)
+      val next = phase(phase(edges, large = true), large = false)
         .localCheckpoint()
       // set equality over the two materialized DISTINCT edge sets: equal
       // cardinality plus one-sided difference emptiness suffices (and

@@ -101,19 +101,10 @@ object Dedup {
     val sizes = buckets.select(explode(col("__ids")).as(id))
       .groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
     val common = buckets.filter(size(col("__ids")) >= 2)
-      // pin-spread the qualifying buckets BEFORE the map-side pair
-      // explode (the spreadPairs discipline, one stage earlier): bucket
-      // rows are ~KB so AQE's byte-based coalescing packs them into one
-      // task, and the explode multiplies the rows ~40x INSIDE that task
-      // (measured r19: 27k bucket rows -> 1.13M pair rows + partial
-      // count in ONE task, 1.9 s). A width-pinned repartition keyed by
-      // the bucket hash (REPARTITION_BY_NUM is not AQE-coalescible)
-      // spreads the explode + partial aggregation at any scale; the
-      // extra exchange ships the pre-explosion bucket rows — the
-      // cheapest place to pay it (guide §2.5: partition by work).
-      .repartition(
-        docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("__h"))
+      // spread the qualifying buckets BEFORE the map-side pair explode,
+      // which multiplies the rows ~40x inside each task; the exchange
+      // ships the pre-explosion bucket rows, the cheapest place to pay it
+      .transform(Scale.spread(_, col("__h")))
       .select(explode(sortedPairs(col("__ids"))).as("__p"))
       .select(col("__p.id_1").as("id_1"), col("__p.id_2").as("id_2"))
       // duplicate input ids would make (x,x) pairs; keep the strict guard
@@ -216,20 +207,12 @@ object Dedup {
       .distinct()
   }
 
-  /** Spread candidate pairs to the session's shuffle width before a
-    * per-pair CPU kernel (the exact-Jaccard confirm): candidate rows
-    * are two 8-byte ids, so AQE's BYTE-based partition coalescing packs
-    * the whole stream into one task (measured r18: d3b's 97k-pair
-    * confirm ran 4.2 s in ONE task — ~1 MB of rows but ~40 us/pair of
-    * kernel), serializing exactly the stage the banding prune exists to
-    * keep cheap. A width-pinned repartition (REPARTITION_BY_NUM shuffles
-    * are not AQE-coalescible) keyed by the pair spreads the confirm at
-    * any scale; the extra exchange ships ids only (guide §2.5's
-    * compute-skew case: partition by work, not bytes). */
+  /** Spread candidate pairs ([[Scale.spread]]) before a per-pair CPU
+    * kernel (the exact-Jaccard confirm): measured r18, d3b's 97k-pair
+    * confirm (~1 MB of ids, ~40 us/pair) ran 4.2 s in ONE task when
+    * AQE coalesced it. The extra exchange ships ids only. */
   private[ops] def spreadPairs(cands: DataFrame): DataFrame =
-    cands.repartition(
-      cands.sparkSession.sessionState.conf.numShufflePartitions,
-      col("id_1"), col("id_2"))
+    Scale.spread(cands, col("id_1"), col("id_2"))
 
   /** MinHash dedup with exact-Jaccard verification of LSH candidates —
     * the standard two-stage shape: cheap banding prune, exact per-pair
@@ -504,14 +487,9 @@ object Dedup {
     val cands = banded.groupBy(col("band"), col("bucket"))
       .agg(boundedIds(id, maxBucketSize).as("__ids"))
       .filter(col("__ids").isNotNull && size(col("__ids")) >= 2)
-      // pin-spread the qualifying buckets before the map-side pair
-      // explode (the jaccardPairs discipline): AQE packs the ~KB bucket
-      // rows into one task and the explode multiplies them ~50-100x
-      // inside it (measured r19: 1726 buckets -> 147k pairs + partial
-      // distinct in ONE task on the multimodal apply path)
-      .repartition(
-        input.sparkSession.sessionState.conf.numShufflePartitions,
-        col("band"), col("bucket"))
+      // spread the qualifying buckets before the map-side pair explode
+      // (the jaccardPairs discipline; it multiplies the rows ~50-100x)
+      .transform(Scale.spread(_, col("band"), col("bucket")))
       .select(explode(sortedPairs(col("__ids"))).as("__p"))
       .select(col("__p.id_1").as("id_1"), col("__p.id_2").as("id_2"))
       // duplicate input ids would make (x,x) pairs; keep the strict guard

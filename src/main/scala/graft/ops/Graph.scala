@@ -277,40 +277,16 @@ object Graph {
     // 1x), big graphs stay on disk where the 100 TB posture wants
     // these intermediates anyway.
     val diskOnly = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    // PINNED edge-frame width (r19, guide §2.5 "partition by work, not
-    // bytes"): the dedup exchange carries only ~16 B/row, so AQE
-    // coalesces it to ~1 MB partitions — 10 tasks at gate scale — and
-    // every consumer of the checkpointed frame then runs that narrow:
-    // the DISK_ONLY checkpoint write, BOTH degree partial-agg scans,
-    // and the wedge explode are per-row CPU work that measured 2.5 s /
-    // 1.2 s / 1.2 s of stage wall at 10-wide vs ~0.4 s at session
-    // width (QProfile r19). Width = session parallelism grown with the
-    // input's own planned split, never a constant: a corpus-scale
-    // graph whose scan is already wider than the session keeps its
-    // size-derived width. The probe is exchange-safe gated (the
-    // Scale.isUnderSplit discipline — on an exchange-bearing input
-    // `.rdd` would materialize AQE stages, so fall back to session
-    // width there). Pinning the dedup exchange itself (repartition on
-    // the agg keys feeds the distinct without a second exchange)
-    // trades the partial-agg combine of exact duplicates for the
-    // pinned width — the raw pair rows it now shuffles are the
-    // smallest exchange in the kernel by 30x (wedges dominate).
-    val sessionPar =
-      pairs.sparkSession.sessionState.conf.numShufflePartitions
-    val edgeW = {
-      import org.apache.spark.sql.execution.exchange.Exchange
-      import org.apache.spark.sql.catalyst.expressions.PlanExpression
-      val plan = pairs.queryExecution.sparkPlan
-      val probeSafe = !plan.exists(p => p.isInstanceOf[Exchange] ||
-        p.expressions.exists(_.exists(_.isInstanceOf[PlanExpression[_]])))
-      val scanW = if (probeSafe) pairs.rdd.getNumPartitions else 0
-      math.max(sessionPar, scanW)
-    }
-    val undDisk = pairs
+    // Spread the dedup exchange itself (the checkpoint write, both
+    // degree scans and the wedge explode run on its partitions). Keyed
+    // on the agg keys, it feeds the distinct without a second exchange;
+    // it gives up the partial-agg combine of exact duplicates, and the
+    // raw pair rows are still the smallest exchange in the kernel by 30x
+    // (wedges dominate). (`Scale` here is the PageRank fixed-point unit.)
+    val undDisk = graft.ops.Scale.spread(pairs
       .select(least(col("id_1"), col("id_2")).as("a"),
         greatest(col("id_1"), col("id_2")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .repartition(edgeW, col("a"), col("b"))
+      .filter(col("a") =!= col("b")), col("a"), col("b"))
       .distinct()
       .localCheckpoint(true, diskOnly)
     val eCount = undDisk.count()
@@ -324,29 +300,10 @@ object Graph {
     // streaming from disk, so no dedicated materialization pass is
     // added (an eager re-checkpoint here measured +16% at 20x in the
     // same-day A/B)
-    val undP = if (smallGraph)
+    val und = if (smallGraph)
       undDisk.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else undDisk
-    // SIZE the checkpointed frame's consumers by ROW COUNT (the
-    // Components sizedWidth discipline): the pinned write above is
-    // deliberately wide, but a small graph (the DOULION 20% sample:
-    // ~120k edges) then pays 32 tiny tasks in every degree/orientation
-    // /wedge scan — measured +0.9 s on graph_triangles_approx when
-    // left at the pinned width. ~16k edge rows/task keeps each task's
-    // per-row CPU (~15-20 us/row of checkpoint serialization + degree
-    // partial-agg + wedge explode, QProfile r19) an order of magnitude
-    // over the fixed task overhead; coalesce is exchange-free (a
-    // narrow merge of cached blocks) and a no-op whenever the
-    // row-derived width reaches the pinned width (the main gate graph
-    // and every corpus-scale graph).
-    val edgeRowsPerTask = 16L * 1000
-    val und = {
-      val cur = undDisk.rdd.getNumPartitions
-      val w = math.max(1L, math.min(cur.toLong,
-        (eCount + edgeRowsPerTask - 1) / edgeRowsPerTask)).toInt
-      if (w >= cur) undP else undP.coalesce(w)
-    }
     // deg is joined TWICE below (a-side and b-side); without a cut the
     // whole degree aggregation runs twice — exchange reuse does not fire
     // across the two renamed references (r18 profile: two identical
@@ -393,18 +350,11 @@ object Graph {
     // wedge enumeration over a (possibly src-sliced) oriented edge set:
     // a slice's out-edges are complete per src, so its wedge set is
     // exactly the wedges whose center falls in the slice
-    def gatedWedges(orientedSlice: DataFrame, sliceEdges: Long): DataFrame = {
-      // pin the wedge self-join's src exchange at a WORK-sized width
-      // (r19, guide §2.5): the explode inflates edge rows into wedge
-      // rows INSIDE this stage, so AQE's byte view of the (tiny) edge
-      // shuffle under-parallelizes the kernel (measured 10 tasks /
-      // 3.1 s CPU at gate scale); ~16k edge rows/task keeps the
-      // per-task explode work over the task floor, the session width
-      // caps it, and one pinned exchange serves both join sides
+    def gatedWedges(orientedSlice: DataFrame): DataFrame = {
+      // the explode inflates edge rows into wedge rows inside the
+      // stage after this exchange; one spread serves both join sides
       // (self-join over the same repartition subtree)
-      val wW = math.max(1L, math.min(sessionPar.toLong,
-        sliceEdges / 16000L + 1)).toInt
-      val o = orientedSlice.repartition(wW, col("src"))
+      val o = graft.ops.Scale.spread(orientedSlice, col("src"))
       val x = o.select(col("src"), col("dst").as("v"),
         col("ddst").as("dv"))
       val y = o.select(col("src"), col("dst").as("w"),
@@ -443,22 +393,13 @@ object Graph {
     // the (expensive) join output — exploding the member array replaces
     // the former 3-branch union, which re-ran the SMJ once per
     // projected corner (exchange reuse does not reuse the join itself)
-    def closingCounts(orientedSlice: DataFrame,
-        sliceWedges: Long, sliceEdges: Long): DataFrame = {
-      // WORK-sized pin within the session width (r19, guide §2.5), the
-      // scale-derived growth beyond it (unchanged): at gate scale AQE's
-      // byte view coalesced the closing SMJ/SHJ to 16 partitions while
-      // the fused join+explode+partial-agg costs ~5 us/wedge-row
-      // (measured 12 s CPU / 1.0 s wall); ~75k wedge rows/task keeps
-      // each task well over the task floor, and a SMALL sampled graph
-      // (DOULION's 20% subgraph) derives a narrow width instead of 32
-      // tiny tasks. The pin replaces the former unpinned
-      // nPart == sessionPar branch — its "+30% at 1x" note predated the
-      // width-sized wedge map side; re-measured both ways this round.
+    def closingCounts(orientedSlice: DataFrame, sliceWedges: Long)
+        : DataFrame = {
+      // the spread width, grown with the wedge volume (see above)
       val nPart = math.max(
-        math.min(sessionPar.toLong, sliceWedges / 75000L + 1),
+        graft.ops.Scale.width(orientedSlice.sparkSession).toLong,
         math.min(4096L, sliceWedges / 2000000L + 1)).toInt
-      val gated = gatedWedges(orientedSlice, sliceEdges)
+      val gated = gatedWedges(orientedSlice)
       // SHUFFLE_HASH on the edge side (guide §3.1): the closing probe is
       // a pure equi-join where the wedge stream dominates; sort-merge
       // pays an O(n log n) sort of BOTH the wedge slice and the edge set
@@ -501,7 +442,7 @@ object Graph {
     // point <= 40x: the plan there is byte-for-byte the r16 plan.
     val passes = math.max(math.max(1, minClosingPasses).toLong,
       (wedgeRows + maxWedgeRowsPerPass - 1) / maxWedgeRowsPerPass).toInt
-    if (passes <= 1) closingCounts(oriented, wedgeRows, edgeRows)
+    if (passes <= 1) closingCounts(oriented, wedgeRows)
     else {
       // CONCURRENT passes under the same disk budget (r19, guide §1.2):
       // when P was forced ABOVE what the budget requires (the sliced
@@ -523,8 +464,7 @@ object Graph {
         val part = closingCounts(
           oriented.filter(
             pmod(hash(col("src")), lit(passes)) === lit(p)),
-          wedgeRows / passes,
-          edgeRows / passes).localCheckpoint(true)
+          wedgeRows / passes).localCheckpoint(true)
         // nudge ContextCleaner to free the pass's shuffle files — but
         // only when the per-pass transient is actually disk-relevant
         // (~3.6 GB at 100M wedge rows); a forced-slicing run at gate

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale techniques for the 100 TB posture that don't show up in the
@@ -8,6 +8,24 @@ import org.apache.spark.sql.functions._
   * read time) and deterministic salting for skewed keys.
   */
 object Scale {
+
+  /** The width of per-row work: the session's shuffle partitions, which
+    * `GraftSession` sets to the cores. AQE coalesces an exchange by
+    * bytes, but the stages these exchanges feed cost per row (chunk
+    * kernels, pair explodes, Jaccard confirms, image decodes, triangle
+    * wedges, HNSW hops): a few MB of ids or KB-sized rows would be
+    * packed into one or two tasks while the kernel above them runs for
+    * seconds. This is the one place that decides that width; an
+    * adaptive policy for it changes this function and no call site. */
+  def width(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
+
+  /** Hash-repartition `df` on `keys` at [[width]]. A
+    * `REPARTITION_BY_NUM` exchange is one AQE does not coalesce, so the
+    * per-row work after it runs on every core at any scale; results are
+    * row-identical. */
+  def spread(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(width(df.sparkSession), keys: _*)
 
   /** Spread an UNDER-SPLIT source before per-row kernel work (r18,
     * guide §2.5 "partition by work, not bytes"): a tiny parquet table is

@@ -1352,26 +1352,6 @@ object Similarity {
     // measured 4 AQE stage-jobs per hop at gate scale, halved by this.
     // Candidate SET and ranking order are unchanged, so every descent
     // twin replays bit-identically.
-    // HOP EXCHANGE WIDTH FROM THE KNOWN CANDIDATE VOLUME (r19, guide
-    // §2.5): a hop's candidate set is bounded by construction — at most
-    // nQ x beamWidth x (2m+1) rows (every beam node expands to its
-    // <=2m neighbours plus itself) — so the exchange width is computed
-    // from that bound (~128k rows/task, the band where the per-task
-    // scoring work dwarfs task overhead) instead of letting AQE
-    // discover the same number with a stage-job per hop. One query
-    // batch at gate scale pins to 1-2 tasks; a 2k-query dedup sweep
-    // pins to ~17; a million-query production batch grows to the
-    // session width. nQ is one count of the (small, broadcast) query
-    // side, paid once per search.
-    val hopRowsPerTask = 128L * 1000
-    val sessionParH =
-      queries.sparkSession.sessionState.conf.numShufflePartitions
-    val nQ = queries.count()
-    def wHop(width: Int): Int = {
-      val rows = nQ * width * 17L
-      math.max(1L, math.min(sessionParH.toLong,
-        (rows + hopRowsPerTask - 1) / hopRowsPerTask)).toInt
-    }
     // EXPLICIT scale-gated broadcasts for the static descent (r19): the
     // non-adaptive scope below plans from static stats, and a
     // checkpointed LogicalRDD reports the session default size — so the
@@ -1387,6 +1367,7 @@ object Similarity {
     // pairs — the beam is width-bounded by construction, so this is a
     // row-count fact, not a guess).
     val tB = if (maxOcc < 5) broadcast(t) else t
+    val nQ = queries.count() // the small, broadcast query side, once
     // 32k rows: the per-hop driver-side hash build of a broadcast beam
     // measured NET-NEGATIVE at 128k rows (d5d 4.0 -> 6.1 s isolated —
     // ten 3 MB builds per search) and net-positive at the point-lookup
@@ -1395,7 +1376,7 @@ object Similarity {
     val beamSmall =
       nQ * math.max(math.max(beam1Eff, beam0Eff), 1).toLong <= 32000L
     def prune(cand: DataFrame, width: Int): DataFrame = {
-      val c = cand.repartition(wHop(width), col("qid")).distinct()
+      val c = Scale.spread(cand, col("qid")).distinct()
       val scored = c.join(tB, Seq("tid")).join(q, Seq("qid"))
         .withColumn("cos", scaledDot(col("qe"), col("te")).cast("double") /
           sqrt((col("qn") * col("tn")).cast("double")))
@@ -1443,7 +1424,7 @@ object Similarity {
     // DESCENT RUNS NON-ADAPTIVE (r19, guide §1.2/§2.4): every frame a
     // hop touches is an eagerly checkpointed LogicalRDD with EXACT
     // stats (t, adjacency, the beam cuts), the hop exchange width is
-    // computed above from the candidate bound, and per-qid skew is
+    // [[Scale.width]], and per-qid skew is
     // impossible (each query contributes at most width x (2m+1)
     // candidate rows by construction) — so AQE has no decision left to
     // improve, but each hop materialization still paid one stage-job

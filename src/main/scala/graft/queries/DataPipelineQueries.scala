@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.{BandIndex, Bloom, Components, Dedup, LangIdNgram, Layout,
-  Multimodal, Rank, Sampling, Similarity, Sketch, TextAnalysis}
+  Multimodal, Rank, Sampling, Scale, Similarity, Sketch, TextAnalysis}
 import graft.util.Tables._
 
 /** Training-data pipeline operators (driver north star): dedup family,
@@ -3460,16 +3460,11 @@ object DataPipelineQueries {
     // with a per-doc ~1/13-of-blocks bump.
     "mm_jpeg_neardup" -> ((s, dir) => {
       import s.implicits._
-      // repartition BEFORE the decode (the doc scan is a handful of
-      // parquet splits — without the spread, per-row DCT work runs on
-      // 2 cores), localCheckpoint AFTER it (hammingPairs consumes the
-      // hashed frame three times; the decode must run once per row).
-      // Width-PINNED (r19): the by-col form is AQE-coalescible and the
-      // 0.01MB id exchange packed the whole decode into ONE task
-      // (measured: 2.19 s single-task stage; 2.64 -> 0.99 s pinned)
+      // spread BEFORE the decode (the doc scan is a handful of parquet
+      // splits), localCheckpoint AFTER it (hammingPairs consumes the
+      // hashed frame three times; the decode must run once per row)
       val hashed = t(s, dir, "documents").filter($"doc_id" % 3 === 0)
-        .select($"doc_id").repartition(
-          s.sessionState.conf.numShufflePartitions, col("doc_id"))
+        .select($"doc_id").transform(Scale.spread(_, col("doc_id")))
         .select($"doc_id", jpegDHashCol($"doc_id").as("dhash"))
         .localCheckpoint()
       Dedup.hammingPairs(hashed, "doc_id", "dhash",
@@ -3485,11 +3480,9 @@ object DataPipelineQueries {
     // with a per-doc ~1.6%-of-pixels perturbation.
     "mm_image_neardup" -> ((s, dir) => {
       import s.implicits._
-      // spread the decode, run it once (the mm_jpeg_neardup discipline,
-      // width-pinned like it — the by-col form AQE-coalesced to 1 task)
+      // spread the decode, run it once (the mm_jpeg_neardup discipline)
       val hashed = t(s, dir, "documents").filter($"doc_id" % 3 === 0)
-        .select($"doc_id").repartition(
-          s.sessionState.conf.numShufflePartitions, col("doc_id"))
+        .select($"doc_id").transform(Scale.spread(_, col("doc_id")))
         .select($"doc_id", imageDHashCol($"doc_id").as("dhash"))
         .localCheckpoint()
       Dedup.hammingPairs(hashed, "doc_id", "dhash",

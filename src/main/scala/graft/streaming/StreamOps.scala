@@ -21,10 +21,11 @@ object StreamOps {
     * isAdjustedToUTC=false (surfaces as NTZ). A FileStreamSource needs an
     * explicit schema, so probe the on-disk type with one batch footer read
     * and normalize either shape to TimestampType (watermarks require it;
-    * the session timezone is pinned to UTC so the NTZ cast is identity). */
+    * the session timezone is pinned to UTC so the NTZ cast is identity).
+    * The nanosAsLong conf is set by [[graft.GraftSession.build]], which
+    * builds every session; this read writes no conf. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = spark.read.parquet(dir).schema("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType),

@@ -27,9 +27,10 @@ object Tables {
     * TIMESTAMP(NANOS) (readable only as a long via the nanosAsLong legacy
     * conf) and plain TIMESTAMP(MICROS). Normalize either to a microsecond
     * TimestampType so downstream ops always see a regular timestamp.
+    * The conf is the session's own: [[graft.GraftSession.build]] sets it,
+    * and every session is built there; this read writes no conf.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = t(spark, dir, "events")
     df.schema("ts").dataType match {
       case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -162,12 +162,19 @@ class ScopedPlanningSpec extends SparkSpec {
     names.contains(f.getFileName.toString)
 
   test("nothing under src/main writes the session conf or the job " +
-      "description, outside ScopedPlanning and the two nanosAsLong reads") {
+      "description, outside ScopedPlanning") {
     val banned = Seq(".conf.set(", ".conf.unset(", "setJobDescription(")
     val hits = sourceHits("src/main/scala") { (f, line) =>
-      banned.exists(line.contains) && !named(f, "ScopedPlanning.scala") &&
-        !(named(f, "Tables.scala", "StreamOps.scala") &&
-          line.contains("spark.sql.legacy.parquet.nanosAsLong"))
+      banned.exists(line.contains) && !named(f, "ScopedPlanning.scala")
+    }
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("per-row work widths are decided in Scale alone") {
+    val hits = sourceHits("src/main/scala") { (f, line) =>
+      Seq("numShufflePartitions", "RowsPerTask").exists(line.contains) &&
+        !named(f, "Scale.scala") &&
+        !(named(f, "Components.scala") && line.contains("SymRowsPerTask"))
     }
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }

@@ -6,6 +6,21 @@ import org.apache.spark.sql.functions._
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
 
+  test("spread plans one REPARTITION_BY_NUM shuffle at the session width") {
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ShuffleExchangeExec}
+    // a width apart from the cores, so the test sees the conf being read
+    val ns = spark.newSession()
+    ns.conf.set("spark.sql.shuffle.partitions", "7")
+    assert(Scale.width(ns) == 7)
+    val df = Scale.spread(ns.range(100).toDF("k"), col("k"))
+    val shuffles = df.queryExecution.sparkPlan.collect {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(shuffles.map(e => (e.shuffleOrigin, e.numPartitions)) ==
+      Seq((REPARTITION_BY_NUM, 7)), df.queryExecution.sparkPlan.toString)
+  }
+
   test("bucketed tables join without an exchange") {
     val a = (0L until 1000L).map(i => (i, s"a$i")).toDF("k", "va")
     val b = (0L until 1000L).map(i => (i, s"b$i")).toDF("k", "vb")
